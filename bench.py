@@ -9,10 +9,11 @@ Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 
 Each timed query is forced end-to-end with a noop-format write (full
 computation on executors, no driver collect). The headline `pipeline`
-entry is the north-star path: synthetic transcript table -> per-conv
-series -> model compression -> 1m/1h/1d tiers with gap-fill; its
-turns/sec is reported separately. Scaling (local[8] vs local[32]) is
-measured by tools/scaling_bench.py and reported in BENCH.md.
+entry is the shipped pipeline, TierPipeline.run: synthetic transcript
+table -> raw -> series -> segments -> 1m/1h/1d tiers, persisted with
+lineage in a fresh warehouse; its turns/sec is reported separately.
+Scaling (local[N] vs local[4N]) is measured by tools/scaling_bench.py on
+the same run_pipeline and reported in BENCH_SCALING.md.
 """
 
 from __future__ import annotations
@@ -178,78 +179,29 @@ def _force(df) -> int:
     return 0
 
 
-def bench_pipeline(
-    spark,
-    n_convs: int,
-    turns_base: int = 5000,
-    input_dir: str | None = None,
-    bucketed: bool | None = None,
-) -> tuple[float, int]:
-    """North-star path: transcripts (parquet) -> series -> segments ->
-    1m -> 1h -> 1d (all forced). Input synthesis happens once, to a
-    size-keyed parquet dir, OUTSIDE the timed window (the generator is
+def run_pipeline(spark, n_convs: int, turns_base: int = 5000) -> tuple[float, int]:
+    """North-star path, as shipped: TierPipeline.run (raw -> series ->
+    segments -> 1m -> 1h -> 1d, each persisted with lineage) on a fresh
+    warehouse with TierPipeline's defaults — the configuration
+    `python -m modelardb_dynamic_spark` runs. Input synthesis happens once,
+    to a size-keyed parquet dir, OUTSIDE the timed window (the generator is
     deterministic, so every run and parallelism level reads identical
     bytes); the timed pipeline starts at the storage read, like a real
     job. turns_base=5000 with the generator's Zipf skew yields roughly
-    50 * n_convs turns with a 15k-turn hot head conversation.
-
-    bucketed (default OFF; MDBS_PIPELINE_BUCKETED=1 to opt in): stage
-    the input as a bucket(128, conv_id) table — the north rule's Iceberg
-    input layout, reproduced on plain parquet (sources/bucketed.py) —
-    and compress with pre_partitioned=True, so the whole compress stage
-    runs shuffle-FREE (scan -> in-task sort -> Arrow kernel). Output is
-    bit-identical to the shuffled path (tests/test_pipeline.py). Why the
-    local default is the SHUFFLED path: a warm quiet-window A/B on this
-    box (18.6M turns, local[16], steal <=1%) measured legacy 24.3-28.0 s
-    vs bucketed 35.9-36.3 s (29.7-33.9 s with the coalesce-to-2xcores
-    read) — a single-JVM "shuffle" is an in-memory copy, so eliminating
-    it buys ~nothing here, while the bucketed scan's fixed one-task-per-
-    bucket granularity forfeits AQE's balanced partitions and multiplies
-    downstream per-(map x reduce) zstd stream setup. On a real cluster
-    the same exchange is 12.2 B/turn ACROSS THE NETWORK (~12 TB moved
-    twice at 10^12 turns, BENCH.md round-4 headline) and the bucketed
-    scan wins; the trade is per-deployment, both paths are tested, and
-    the full A/B table is in BENCH.md."""
+    50 * n_convs turns with a 15k-turn hot head conversation. Compression
+    stats of the written segments land in run_pipeline.last_stats; the
+    warehouse is deleted afterwards."""
+    import shutil
     import tempfile
 
-    from modelardb_dynamic_spark.operators.compress import compress_transcripts
-    from modelardb_dynamic_spark.operators.rollup import downsample, gap_fill, rollup
+    from modelardb_dynamic_spark.operators.compress import compression_stats
+    from modelardb_dynamic_spark.plans.pipeline import TierPipeline
+    from modelardb_dynamic_spark.sources.catalog import Warehouse
     from modelardb_dynamic_spark.sources.transcripts import generate_transcripts
 
-    if bucketed is None:
-        bucketed = os.environ.get("MDBS_PIPELINE_BUCKETED", "0") == "1"
     base = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
-    suffix = "_b128" if bucketed else ""
-    path = input_dir or os.path.join(
-        base, f"mdbs_bench_input_{n_convs}_{turns_base}{suffix}"
-    )
-    n_buckets = 128
-    if bucketed:
-        from modelardb_dynamic_spark.sources.bucketed import (
-            read_bucketed,
-            register_bucketed,
-            write_bucketed,
-        )
-
-        table = f"mdbs_bench_in_{n_convs}_{turns_base}_b{n_buckets}"
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            if spark.catalog.tableExists(table):
-                spark.sql(f"DROP TABLE `{table}`")
-            write_bucketed(
-                generate_transcripts(
-                    spark, n_convs=n_convs, turns_base=turns_base
-                ),
-                path,
-                table,
-                bucket_col="conv_id",
-                n_buckets=n_buckets,
-                sort_cols=("conv_id", "ts"),
-            )
-        else:
-            register_bucketed(
-                spark, path, table, "conv_id", n_buckets, ("conv_id", "ts")
-            )
-    elif not os.path.exists(os.path.join(path, "_SUCCESS")):
+    path = os.path.join(base, f"mdbs_bench_input_{n_convs}_{turns_base}")
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
         # fixed 64-file layout regardless of the generating session's core
         # count: scan parallelism must not be capped by whoever staged the
         # input (8 files would cap the read stage at 8 tasks)
@@ -258,46 +210,21 @@ def bench_pipeline(
         ).repartition(64).write.mode("overwrite").parquet(path)
     n_turns = spark.read.parquet(path).count()
 
-    t0 = time.time()
-    tr = (
-        read_bucketed(
-            spark, table, n_buckets,
-            coalesce_to=2 * spark.sparkContext.defaultParallelism,
+    wh = Warehouse(tempfile.mkdtemp(prefix="mdbs_bench_wh_", dir=base))
+    try:
+        t0 = time.time()
+        TierPipeline(spark, wh, EngineConfig(error_bound=10.0)).run(
+            spark.read.parquet(path)
         )
-        if bucketed
-        else spark.read.parquet(path)
-    )
-    # fused derive+compress: one narrow exchange, or ZERO on the bucketed
-    # path (bit-identical to the staged series path, asserted in tests)
-    # length_bound 256 (reference default 50 is an in-memory JVM buffer
-    # constraint; the vectorized kernel has none): +37% ratio on the noisy
-    # token_rate series at identical error bound, same reconstruction
-    segs = compress_transcripts(
-        tr,
-        EngineConfig(
-            error_bound=10.0, length_bound=256, sampling_interval_ms=60_000
-        ),
-        salt_span_points=1 << 16,
-        pre_partitioned=bucketed,
-    ).persist()
-    # segs is persisted above: the rollup branches re-read the cache
-    m1 = rollup(segs, 60_000, materialize=False)
-    h1 = rollup(segs, 3_600_000, materialize=False).persist()
-    d1 = downsample(h1, 86_400_000)
-    _force(m1)
-    _force(gap_fill(h1, 3_600_000))
-    _force(d1)
-    wall = time.time() - t0
-    from modelardb_dynamic_spark.operators.compress import compression_stats
-
-    stats = compression_stats(segs).collect()[0].asDict()
-    bench_pipeline.last_stats = {
-        "n_segments": stats["n_segments"],
-        "n_points": stats["n_points"],
-        "compression_ratio": round(stats["compression_ratio"], 2),
-    }
-    segs.unpersist()
-    h1.unpersist()
+        wall = time.time() - t0
+        stats = compression_stats(wh.read(spark, "segments")).collect()[0]
+        run_pipeline.last_stats = {
+            "n_segments": stats["n_segments"],
+            "n_points": stats["n_points"],
+            "compression_ratio": round(stats["compression_ratio"], 2),
+        }
+    finally:
+        shutil.rmtree(wh.root, ignore_errors=True)
     return wall, n_turns
 
 
@@ -386,9 +313,9 @@ def main() -> None:
     # per-query cost with the ~1.5 s/query fixed re-compression removed
     # (r4 VERDICT #4). Queries that don't touch the segment table are
     # unaffected; their warm number is just one more repetition. ONE pass
-    # (memoized timings vary far less than cold ones, and the suite
-    # already ran 2x by now — the JVM is hot); the 1.6x tiebreak still
-    # reruns any noise-hit query.
+    # (the suite already ran 2x by now — the JVM is hot), so the 1.6x
+    # tiebreak never fires: warm numbers are single-sample and indicative
+    # only.
     os.environ["MDBS_BENCH_MEMO_SEGMENTS"] = "1"
     _force(registry["seg_count_s"](spark, sf_dir))  # builds the memo once
     warm_timings = run_passes(1)
@@ -396,7 +323,7 @@ def main() -> None:
 
     pipe_best = None
     for _ in range(repeats):
-        pipe_wall, n_turns = bench_pipeline(
+        pipe_wall, n_turns = run_pipeline(
             spark, n_convs=max(256, int(200_000 * sf))
         )
         if pipe_best is None or pipe_wall < pipe_best[0]:
@@ -421,7 +348,7 @@ def main() -> None:
                 # reference yardstick: REDD ungrouped ratio 38.8 at 10%
                 # error (ModelarDB-Dynamic_report.pdf Table 4.5); ratios are
                 # data-dependent
-                **getattr(bench_pipeline, "last_stats", {}),
+                **getattr(run_pipeline, "last_stats", {}),
                 **smooth_control(),
             }
         )

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from modelardb_dynamic_spark.config import EngineConfig
 from modelardb_dynamic_spark.models.grouped import compress_group
+from modelardb_dynamic_spark.operators.compress import salt_expr
 
 GROUP_SEGMENT_SCHEMA = (
     "gid long, metric string, start_ts long, end_ts long, si int, mtid int, "
@@ -141,10 +142,7 @@ def compress_grouped(
     )
     keys: list = ["gid", "metric"]
     if salt_span_points:
-        span_ms = salt_span_points * si
-        keys = keys + [
-            (F.col("ts_ms") / span_ms).cast("long").alias("salt")
-        ]
+        keys = keys + [salt_expr(salt_span_points * si).alias("salt")]
 
     def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
         gid, metric = int(key[0]), key[1]

@@ -6154,28 +6154,24 @@ def build_oracles() -> dict[str, str]:
     """The static ORACLES plus entries generated from the data itself
     (kmeans centroid literals). __spark_entry__.oracle_sql() calls this so
     the driver's value gate covers ann_ivf_kmeans too (36/36)."""
+    import duckdb
+
     out = dict(ORACLES)
-    try:
-        out["ann_ivf_kmeans"] = _kmeans_oracle_sql()
-        out["ann_pq"] = _pq_oracle_sql()
-    except Exception:
-        pass  # embeddings parquet unavailable -> rows-only fallback
-    try:
-        out["bpe_merges"] = _bpe_oracle_sql()
-    except Exception:
-        pass  # documents parquet unavailable -> rows-only fallback
-    try:
-        out["bm25_search"] = _bm25_oracle_sql()
-    except Exception:
-        pass  # documents parquet unavailable -> rows-only fallback
-    try:
-        out["hybrid_rrf"] = _rrf_oracle_sql()
-    except Exception:
-        pass  # documents parquet unavailable -> rows-only fallback
-    try:
-        out["bpe_encode"] = _bpe_encode_oracle_sql()
-    except Exception:
-        pass  # documents parquet unavailable -> rows-only fallback
+    for name, builder in (
+        ("ann_ivf_kmeans", _kmeans_oracle_sql),
+        ("ann_pq", _pq_oracle_sql),
+        ("bpe_merges", _bpe_oracle_sql),
+        ("bm25_search", _bm25_oracle_sql),
+        ("hybrid_rrf", _rrf_oracle_sql),
+        ("bpe_encode", _bpe_encode_oracle_sql),
+    ):
+        try:
+            out[name] = builder()
+        except (FileNotFoundError, duckdb.IOException):
+            # embeddings/documents parquet missing (pyarrow raises
+            # FileNotFoundError, DuckDB IOException): rows-only fallback.
+            # Any other failure is a broken builder and must surface.
+            pass
     return out
 
 

@@ -8,9 +8,8 @@ Iceberg tables — `bucket(N, sid)` partition transform, sorted by
 (storage/FileStorage.scala:126-259). The sandbox image ships no Iceberg
 jars, so this module provides the same layout and commit discipline on
 plain parquet: hash-bucket directories (`sbucket=K`), sort within files,
-and write-to-temp + atomic rename. The Iceberg path is attempted first and
-falls back cleanly, so the same code switches over when the runtime has
-iceberg-spark on the classpath.
+and write-to-temp + atomic rename. The Iceberg wiring for a runtime with
+iceberg-spark on the classpath is sources/iceberg.py.
 
 The bucket layout mirrors the reference's Cassandra physical model —
 PRIMARY KEY (gid, start_time): all segments of one series live in one
@@ -27,16 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 DEFAULT_BUCKETS = 32
-
-
-def _iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:
-        return False
 
 
 def sid_bucket(col, n_buckets: int = DEFAULT_BUCKETS):

@@ -7,10 +7,11 @@ a cluster where the `iceberg-spark-runtime` jar is on the classpath (or a
 path/maven coordinate to it), it configures the session catalog, creates
 the tables with the documented partition spec — `bucket(N, sid)` +
 sort-ordered `(sid, start_ts)`, mirroring the reference's Cassandra
-`PRIMARY KEY (gid, start_time)` (storage/CassandraStorage.scala:78) — and
-appends segment batches as snapshot commits. Compaction is Iceberg's own
-`rewrite_data_files`, replacing the reference's hand-rolled 10-batch merge
-with crash-recovery sentinels (storage/FileStorage.scala:126-259).
+`PRIMARY KEY (gid, start_time)` (storage/CassandraStorage.scala:78).
+Segment batches append with `writeTo(<table>).append()`, one snapshot
+commit each. Compaction is Iceberg's own `rewrite_data_files`, replacing
+the reference's hand-rolled 10-batch merge with crash-recovery sentinels
+(storage/FileStorage.scala:126-259).
 """
 
 from __future__ import annotations
@@ -111,14 +112,6 @@ def create_warehouse(
         spark.sql(
             TIER_DDL.format(catalog=catalog, db=db, name=name, n_buckets=n_buckets)
         )
-
-
-def append_segments(
-    segments: Any, catalog: str = "mdbs", db: str = "engine"
-) -> None:
-    """One atomic snapshot commit per batch (replaces the reference's
-    batched storeSegmentGroups + crash-recovery log)."""
-    segments.writeTo(f"{catalog}.{db}.segments").append()
 
 
 def compact(spark: Any, catalog: str = "mdbs", db: str = "engine",

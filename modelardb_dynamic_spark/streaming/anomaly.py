@@ -149,16 +149,3 @@ def stream_zscore(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def stream_zscore_batch_twin(
-    points: DataFrame,
-    window_buckets: int = 24,
-    min_periods: int = 12,
-    k: int = 3,
-) -> DataFrame:
-    """The batch expression the stream must equal at the frontier —
-    re-exported so tests and docs name the contract in one place."""
-    from modelardb_dynamic_spark.operators.analytics import rolling_zscore
-
-    return rolling_zscore(points, window_buckets, min_periods, k)

@@ -115,12 +115,3 @@ def stream_ewma(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def stream_ewma_batch_twin(
-    points: DataFrame, bucket_ms: int, alpha: float = 0.3
-) -> DataFrame:
-    """The batch contract the stream must equal at the frontier."""
-    from modelardb_dynamic_spark.operators.analytics import ewma_levels
-
-    return ewma_levels(points, bucket_ms, alpha=alpha)

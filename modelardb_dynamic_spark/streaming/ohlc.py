@@ -124,10 +124,3 @@ def stream_ohlc(points: DataFrame, bucket_ms: int) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def stream_ohlc_batch_twin(points: DataFrame, bucket_ms: int) -> DataFrame:
-    """The batch contract the stream must equal at the frontier."""
-    from modelardb_dynamic_spark.operators.analytics import ohlc_bars
-
-    return ohlc_bars(points, bucket_ms)

@@ -163,41 +163,6 @@ def test_fused_compress_transcripts_identical(spark, transcripts, series):
         assert unfused.exceptAll(fused).count() == 0, f"salt={salt}"
 
 
-def test_bucketed_compress_zero_shuffle_identical(spark, transcripts, tmp_path):
-    """The bucket(N, conv_id) input layout (north rule's Iceberg spec,
-    plain-parquet stand-in): compress_transcripts(pre_partitioned=True)
-    over a bucketed scan must (a) plan ZERO exchanges, (b) read bucketed
-    with one task per bucket (read_bucketed asserts both confs and scan),
-    (c) emit segments bit-identical to the shuffled path, salted and not,
-    and (d) survive catalog re-registration from bare files."""
-    from modelardb_dynamic_spark.operators.compress import compress_transcripts
-    from modelardb_dynamic_spark.sources.bucketed import (
-        read_bucketed,
-        register_bucketed,
-        write_bucketed,
-    )
-
-    path = str(tmp_path / "bucketed_in")
-    spark.sql("DROP TABLE IF EXISTS t_bucketed_in")
-    write_bucketed(
-        transcripts, path, "t_bucketed_in", "conv_id", 8, ("conv_id", "ts")
-    )
-    # simulate a fresh session's empty catalog: re-register from the files
-    spark.sql("DROP TABLE t_bucketed_in")
-    register_bucketed(spark, path, "t_bucketed_in", "conv_id", 8, ("conv_id", "ts"))
-    b = read_bucketed(spark, "t_bucketed_in", 8)
-    assert b.count() == transcripts.count()
-    for salt in (None, 16):
-        segs_b = compress_transcripts(b, CFG10, salt_span_points=salt,
-                                      pre_partitioned=True)
-        plan = segs_b._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan[:2000]
-        segs_s = compress_transcripts(transcripts, CFG10, salt_span_points=salt)
-        assert segs_b.exceptAll(segs_s).count() == 0, f"salt={salt}"
-        assert segs_s.exceptAll(segs_b).count() == 0, f"salt={salt}"
-    spark.sql("DROP TABLE t_bucketed_in")
-
-
 def test_range_agg_real_time_tail(spark, transcripts, tmp_path):
     """range_agg (tier-selection planner + lineage high-water): build the
     warehouse from the OLD 75% of the transcripts, then land the full set
@@ -1257,6 +1222,61 @@ def test_fsck_flags_corrupted_high_water(spark, transcripts, tmp_path):
     assert len(mm) == 1 and mm[0]["bucket"] == 1
     assert mm[0]["manifest_rows"] == mm[0]["actual_rows"]
     assert mm[0]["manifest_hw"] != mm[0]["actual_hw"]
+
+
+def test_epoch_zero_high_water_is_a_real_mark(spark, tmp_path):
+    """A high-water mark of 0 (epoch) is a mark, not a missing one: one
+    conversation whose turns all fall in the first minute of 1970 must
+    fsck clean, and tier_1m's lineage high-water must be 0 so range_agg
+    still sees the tier as sealed up to it."""
+    import datetime as dt
+
+    from modelardb_dynamic_spark.plans.checkpoint import Lineage
+
+    t0 = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
+    tr = spark.createDataFrame(
+        [
+            ("conv0", i, "user", f"turn {i} text", None,
+             t0 + dt.timedelta(seconds=10 * i))
+            for i in range(4)
+        ],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    )
+    wh = Warehouse(str(tmp_path / "e0"), n_buckets=2)
+    p = TierPipeline(spark, wh, CFG10, chunk_buckets=2, salt_span_points=None)
+    p.run(tr)
+    rep = p.fsck()
+    assert rep["tier_1m"]["buckets_checked"] == 2
+    assert {t: r["mismatches"] for t, r in rep.items() if r["mismatches"]} == {}
+    assert Lineage(wh.path("tier_1m")).metrics()["high_water_ts"] == 0
+
+
+def test_compress_batch_carry_identical(spark, transcripts, series):
+    """Groups that straddle Arrow batch edges are carried, never split:
+    7-row batches (nearly every group spans several) must produce the
+    same segments as the default batch size, for compress and the fused
+    compress_transcripts, plain and salted."""
+    from modelardb_dynamic_spark.operators.compress import compress_transcripts
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+    def rows(salt):
+        return (
+            sorted(compress(series, CFG10, salt_span_points=salt).collect()),
+            sorted(compress_transcripts(
+                transcripts, CFG10, salt_span_points=salt).collect()),
+        )
+
+    prev = spark.conf.get(key)
+    for salt in (None, 16):
+        want = rows(salt)
+        spark.conf.set(key, "7")
+        try:
+            got = rows(salt)
+        finally:
+            spark.conf.set(key, prev)
+        assert got == want, f"salt={salt}"
 
 
 def test_warehouse_orc_segment_sink_roundtrip(spark, series, tmp_path):

@@ -32,7 +32,7 @@ sys.path.insert(0, REPO)
 
 def measure(cpus: int, n_convs: int, turns_base: int, repeats: int = 1) -> dict:
     os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
-    from bench import bench_pipeline
+    from bench import run_pipeline
     from modelardb_dynamic_spark.session import build_session
 
     spark = build_session(f"scaling-{cpus}", master=f"local[{cpus}]")
@@ -44,7 +44,7 @@ def measure(cpus: int, n_convs: int, turns_base: int, repeats: int = 1) -> dict:
     spark.range(0, cpus, 1, cpus).mapInPandas(_ident, schema="id long").count()
     best = None
     for _ in range(repeats):
-        wall, n_turns = bench_pipeline(spark, n_convs=n_convs, turns_base=turns_base)
+        wall, n_turns = run_pipeline(spark, n_convs=n_convs, turns_base=turns_base)
         if best is None or wall < best[0]:
             best = (wall, n_turns)
     spark.stop()

@@ -91,7 +91,7 @@ def measure_worker(cpus: int, n_convs: int, turns_base: int, repeats: int) -> No
     """Child entry: one pinned pipeline measurement (pinning done by the
     parent's taskset)."""
     os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
-    from bench import bench_pipeline
+    from bench import run_pipeline
     from modelardb_dynamic_spark.session import build_session
 
     spark = build_session(f"decomp-{cpus}-{os.getpid()}", master=f"local[{cpus}]")
@@ -102,7 +102,7 @@ def measure_worker(cpus: int, n_convs: int, turns_base: int, repeats: int) -> No
     spark.range(0, cpus, 1, cpus).mapInPandas(_ident, schema="id long").count()
     best = None
     for _ in range(repeats):
-        wall, n_turns = bench_pipeline(spark, n_convs=n_convs, turns_base=turns_base)
+        wall, n_turns = run_pipeline(spark, n_convs=n_convs, turns_base=turns_base)
         if best is None or wall < best[0]:
             best = (wall, n_turns)
     spark.stop()
@@ -151,11 +151,11 @@ def main() -> None:
     # all read the same deterministic parquet; racing the staging write
     # would corrupt it)
     os.environ["SPARK_GRAFT_CPUS"] = "16"
-    from bench import bench_pipeline
+    from bench import run_pipeline
     from modelardb_dynamic_spark.session import build_session
 
     spark = build_session("decomp-stage", master="local[16]")
-    bench_pipeline(spark, n_convs=args.convs, turns_base=args.turns_base)
+    run_pipeline(spark, n_convs=args.convs, turns_base=args.turns_base)
     spark.stop()
 
     passes = []
